@@ -123,21 +123,27 @@ def _scan_meta(spark: SparkSession, path: str, mtime) -> tuple[int, int]:
     if meta is None:
         import pyarrow.parquet as pq
 
+        # unknown layout: report "already parallel" so the caller never
+        # adds an exchange. A directory with subdirectories (a
+        # partitionBy layout) is unknown too: its files are not all
+        # direct children, so a top-level count undercounts rows and
+        # row groups.
+        unknown = (0, 1 << 30)
         try:
-            if os.path.isdir(path):
+            if not os.path.isdir(path):
+                md = pq.ParquetFile(path).metadata
+                rows, groups = md.num_rows, md.num_row_groups
+            elif any(entry.is_dir() for entry in os.scandir(path)):
+                rows, groups = unknown
+            else:
                 rows = groups = 0
                 for entry in os.scandir(path):
                     if entry.name.endswith(".parquet"):
                         md = pq.ParquetFile(entry.path).metadata
                         rows += md.num_rows
                         groups += md.num_row_groups
-            else:
-                md = pq.ParquetFile(path).metadata
-                rows, groups = md.num_rows, md.num_row_groups
         except Exception:
-            # unreadable footer: report "already parallel" so the
-            # caller never adds an exchange on unknown layouts
-            rows, groups = 0, 1 << 30
+            rows, groups = unknown
         meta = (rows, max(groups, 1))
         cache[key] = meta
     return meta
@@ -169,7 +175,8 @@ def spread_scan(
       scale was 8 tasks, not the blanket 32;
     * project to ``columns`` BEFORE the exchange so the repartition
       never defeats column pruning (the r16 form shipped full rows —
-      ngram's input_bytes +17%);
+      ngram's input_bytes +17%). The projection applies whether or not
+      the spread fires, so the output schema never depends on the gate;
     * self-disable on any layout that can already feed the cluster
       (row groups * 2 > parallelism) — the 100 TB posture, unchanged.
     """
@@ -190,15 +197,17 @@ def spread_scan(
     if spread is None:
         par = spark.sparkContext.defaultParallelism
         rows, n_splits = _scan_meta(spark, path, mtime)
-        if n_splits * 2 > par:
-            spread = df  # layout already feeds the cluster (100 TB case)
-        else:
-            n_target = min(par, rows // max(floor, 1))
-            if n_target <= n_splits or n_target < _SPREAD_MIN_WIDTH:
-                spread = df  # too little work to pay an exchange (r17)
-            else:
-                proj = df.select(*columns) if columns else df
-                spread = proj.repartition(int(n_target))
+        spread = df.select(*columns) if columns else df
+        n_target = min(par, rows // max(floor, 1))
+        # spread only when the layout cannot feed the cluster on its own
+        # (the 100 TB case can) and there is enough work to pay for an
+        # exchange (r17)
+        if (
+            n_splits * 2 <= par
+            and n_target > n_splits
+            and n_target >= _SPREAD_MIN_WIDTH
+        ):
+            spread = spread.repartition(int(n_target))
         cache[key] = spread
     return spread
 

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cassandra_analytics_spark.local_data import local_df
+from cassandra_analytics_spark.operators import layout
 
 # the index layout and query signatures share ONE definition — the
 # sign-LSH builders in operators/similarity.py (a private copy here once
@@ -32,9 +33,6 @@ def _signature_column(vec_col: str, dim: int, num_planes: int, seed: int):
     return _signature_column_expr(F.col(vec_col), dim, num_planes, seed)
 
 
-_LSH_SPEC_SCHEMA = "format string, num_planes int, seed long, dim int"
-
-
 def build_ann_index(
     df: DataFrame,
     index_path: str,
@@ -45,8 +43,9 @@ def build_ann_index(
 ) -> None:
     """Materialize the corpus partitioned by LSH signature.
 
-    The layout parameters (num_planes, seed, dim) are persisted at
-    ``{index_path}_spec``: the signature planes are derived from them, so
+    The layout parameters (num_planes, seed, dim) are persisted in the
+    layout spec (:mod:`~cassandra_analytics_spark.operators.layout`):
+    the signature planes are derived from them, so
     a query or append run with different values would hash to DIFFERENT
     buckets over the same layout and silently read/extend garbage —
     :func:`query_ann_index` and :func:`append_to_ann_index` validate
@@ -57,10 +56,7 @@ def build_ann_index(
     # and never rank (round-8 probe pass)
     probe = df.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
     spark = df.sparkSession
-    # delete the spec BEFORE overwriting the layout: a crash mid-rebuild
-    # leaves a detectably spec-less layout (queries warn, appends refuse)
-    # instead of a fresh spec paired with the PREVIOUS build's buckets
-    _delete_path(spark, f"{index_path}_spec")
+    layout.delete_sidecars(spark, index_path)
     if probe is None:
         # empty corpus: write a readable empty index instead of
         # TypeError-ing on the dim probe — UNpartitioned, because a
@@ -69,9 +65,10 @@ def build_ann_index(
         df.select(F.col(id_col), F.col(vec_col), F.lit(0).alias("sig")).write.mode(
             "overwrite"
         ).parquet(index_path)
-        local_df(
-            spark, [("ann-lsh-v1", num_planes, seed, None)], _LSH_SPEC_SCHEMA
-        ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}_spec")
+        layout.write_spec(
+            spark, index_path, layout.LSH,
+            num_planes=num_planes, seed=seed, dim=None,
+        )
         return
     dim = len(probe[vec_col])
     tagged = df.select(
@@ -80,26 +77,10 @@ def build_ann_index(
         _signature_column(vec_col, dim, num_planes, seed).alias("sig"),
     )
     tagged.write.mode("overwrite").partitionBy("sig").parquet(index_path)
-    local_df(
-        spark, [("ann-lsh-v1", num_planes, seed, dim)], _LSH_SPEC_SCHEMA
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}_spec")
-
-
-def _read_lsh_spec(spark: SparkSession, index_path: str) -> dict | None:
-    """The persisted spec of a sign-LSH layout, or None for pre-spec
-    (legacy) layouts."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        rows = spark.read.parquet(f"{index_path}_spec").collect()
-    except AnalysisException:
-        return None
-    if len(rows) != 1:
-        raise ValueError(
-            f"corrupt LSH index spec at {index_path}_spec: expected exactly "
-            f"one row, found {len(rows)}"
-        )
-    return rows[0].asDict()
+    layout.write_spec(
+        spark, index_path, layout.LSH,
+        num_planes=num_planes, seed=seed, dim=dim,
+    )
 
 
 def append_to_ann_index(
@@ -114,21 +95,13 @@ def append_to_ann_index(
     is proportional to the batch, and existing signature directories only
     gain files.
 
-    Refuses loudly when the layout predates spec pinning (the plane
-    family cannot be inferred from the data — rebuild), or when it was
-    built over an empty corpus (unpartitioned; rebuild over the union).
+    Refuses loudly when the layout has no spec (the plane family cannot
+    be inferred from the data — rebuild), or when it was built over an
+    empty corpus (unpartitioned; rebuild over the union).
     Ragged vectors die loudly: a vector whose length differs from the
     spec dim would dot against null-padded planes and land in a
     signature that the same vector would never query back."""
-    spark = df.sparkSession
-    spec = _read_lsh_spec(spark, index_path)
-    if spec is None:
-        raise ValueError(
-            f"{index_path!r} has no persisted spec ({index_path}_spec) — "
-            "it predates spec pinning; rebuild it with build_ann_index "
-            "before appending (the signature plane family is part of the "
-            "layout and cannot be inferred from the data)"
-        )
+    spec = layout.read_spec(df.sparkSession, index_path, (layout.LSH,))
     if spec["dim"] is None:
         raise ValueError(
             f"{index_path!r} was built over an empty corpus (unpartitioned "
@@ -154,21 +127,9 @@ def append_to_ann_index(
     tagged.write.mode("append").partitionBy("sig").parquet(index_path)
 
 
-_IVF_SPEC_SCHEMA = (
-    "format string, assignment string, sim_id string, dim int, "
-    "num_centroids int, seed long, quantized boolean"
-)
-
 # fixed column names for the quantized layout (independent of vec_col so
 # probes don't have to rediscover them): int8 codes + affine metadata
 _QCODE, _QMIN, _QSCALE = "qvec", "qmin", "qscale"
-
-
-def _spec_quantized(spec: dict | None) -> bool:
-    """Whether a persisted spec declares a quantized layout. Specs written
-    before round 11 have no ``quantized`` column — they read as
-    unquantized (exactly what they are)."""
-    return bool(spec and spec.get("quantized"))
 
 
 def _with_layout_codes(tagged: DataFrame, vec_col: str) -> DataFrame:
@@ -188,14 +149,6 @@ def _with_layout_codes(tagged: DataFrame, vec_col: str) -> DataFrame:
     return tagged.withColumns(
         {_QCODE: codes, _QMIN: vmin, _QSCALE: scale}
     )
-
-
-def _delete_path(spark: SparkSession, path_str: str) -> None:
-    """Recursively delete a filesystem path via the Hadoop FS API (works
-    on any Spark-supported store, not just local disk)."""
-    from cassandra_analytics_spark.fs import delete_path
-
-    delete_path(spark, path_str)
 
 
 def _dim_guarded(cell, vec_col: str, dim: int):
@@ -299,8 +252,8 @@ def build_ivf_index(
     corpora — on those the fit buys nothing (round-4 measurement). The
     centroid list is persisted next to the cells so a query session does
     not need the original corpus, and the index SPEC — assignment mode,
-    custom-sim identifier, dimension — is persisted at
-    ``{index_path}_spec`` so :func:`append_to_ivf_index` can refuse a
+    custom-sim identifier, dimension — is persisted in the layout spec
+    so :func:`append_to_ivf_index` can refuse a
     mismatched extension instead of silently splitting the layout
     (round-9 ADVICE: the modes disagree on exact-tie direction, so the
     mode is part of the persisted layout). Returns the centroids.
@@ -389,16 +342,8 @@ def build_ivf_index(
         # external codebooks are caller data: duplicate cids / mixed dims
         # would silently corrupt every assignment (round-9 probe)
         validate_codebook(centroids)
-    # REBUILD torn-state discipline: the three writes (layout, centroids,
-    # spec) cannot be one atomic commit, so delete the sidecars FIRST — a
-    # crash mid-rebuild then leaves a layout whose queries fail LOUDLY on
-    # the missing centroid table (and whose appends are refused on the
-    # missing spec) instead of silently scoring new cells against the
-    # PREVIOUS build's centroids (round-9 hostile review). For production
-    # refreshes, build to a fresh path and swap.
     spark = df.sparkSession
-    _delete_path(spark, f"{index_path}_spec")
-    _delete_path(spark, f"{index_path}_centroids")
+    layout.delete_sidecars(spark, index_path)
     if not centroids:
         # empty corpus: zero-arg F.array() in nearest_centroid_cell would
         # otherwise produce a null cell partition, and a zero-row
@@ -430,54 +375,18 @@ def build_ivf_index(
         if quantize:
             tagged = _with_layout_codes(tagged, vec_col)
         tagged.write.mode("overwrite").partitionBy("cell").parquet(index_path)
-    local_df(
-        spark,
-        [(cid, [float(x) for x in vec]) for cid, vec in centroids],
-        "cid int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}_centroids")
-    dim = len(centroids[0][1]) if centroids else None
-    local_df(
-        spark,
-        [("ivf-v1", assignment, sim_id, dim, len(centroids), seed, quantize)],
-        _IVF_SPEC_SCHEMA,
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}_spec")
+    layout.write_centroids(spark, index_path, centroids)
+    layout.write_spec(
+        spark, index_path, layout.IVF,
+        assignment=assignment, sim_id=sim_id,
+        dim=len(centroids[0][1]) if centroids else None,
+        num_centroids=len(centroids), seed=seed, quantized=quantize,
+    )
     return centroids
 
 
-def _read_ivf_spec_optional(spark: SparkSession, index_path: str) -> dict | None:
-    """The persisted IVF spec, or None for pre-spec (legacy) layouts.
-    A PRESENT-but-corrupt spec still raises — a multi-row spec is damage,
-    not legacy."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        rows = spark.read.parquet(f"{index_path}_spec").collect()
-    except AnalysisException:
-        return None
-    if len(rows) != 1:
-        raise ValueError(
-            f"corrupt IVF spec at {index_path}_spec: expected exactly one "
-            f"row, found {len(rows)}"
-        )
-    return rows[0].asDict()
-
-
-def read_ivf_spec(spark: SparkSession, index_path: str) -> dict:
-    """The persisted spec of an IVF layout, as a dict. Raises a named
-    error for pre-spec (legacy) layouts."""
-    spec = _read_ivf_spec_optional(spark, index_path)
-    if spec is None:
-        raise ValueError(
-            f"{index_path!r} has no persisted spec ({index_path}_spec) — "
-            "it predates spec pinning; rebuild it with build_ivf_index "
-            "before appending (the assignment mode/tie direction is part "
-            "of the layout and cannot be inferred from the data)"
-        )
-    return spec
-
-
 def _validate_read_math(
-    spec: dict | None,
+    spec: dict,
     dot_fn,
     norm_fn,
     sim_id: str | None,
@@ -497,9 +406,9 @@ def _validate_read_math(
     comparison hash-mismatches, so a warning names the spec's sim_id for
     callers that need bit-exact runs. When ``sim_id`` IS presented it is
     validated against the spec and refused on mismatch, exactly as the
-    append path does; presenting it against a built-in-mode layout, a
-    spec-less legacy layout, or without the functions it names is a
-    named error (an unverifiable claim is worse than no claim)."""
+    append path does; presenting it against a built-in-mode layout or
+    without the functions it names is a named error (an unverifiable
+    claim is worse than no claim)."""
     import warnings
 
     custom = dot_fn is not None or norm_fn is not None
@@ -509,14 +418,6 @@ def _validate_read_math(
             "the functions claims custom math while scoring with the "
             "built-in cosine; drop sim_id or pass the functions it names"
         )
-    if spec is None:
-        if sim_id is not None:
-            raise ValueError(
-                f"{index_path!r} has no persisted spec to validate "
-                f"sim_id={sim_id!r} against (pre-spec layout) — rebuild "
-                "with build_ivf_index, or drop sim_id"
-            )
-        return
     if spec["assignment"] == "custom":
         if sim_id is not None and sim_id != spec["sim_id"]:
             raise ValueError(
@@ -528,7 +429,7 @@ def _validate_read_math(
         if sim_id is None:
             warnings.warn(
                 f"reading a custom-math IVF layout "
-                f"(sim_id={spec['sim_id']!r} at {index_path}_spec) with "
+                f"(sim_id={spec['sim_id']!r} at {index_path!r}) with "
                 "unverified scoring math: candidate scores may differ "
                 "from the build's math in the last ulp (rankings differ "
                 "only at exact ties) — pass the layout's dot_fn/norm_fn "
@@ -573,7 +474,7 @@ def append_to_ivf_index(
     writer's append-only batch model
     (``bulkwriter/CassandraBulkSourceRelation.java:116-131``).
 
-    Refuses loudly when: the layout has no spec (legacy — rebuild), the
+    Refuses loudly when: the layout has no spec (rebuild), the
     layout was built over an EMPTY corpus (unpartitioned, no centroids —
     rebuild), the spec's assignment mode is ``custom`` but ``sim_id``
     does not match (or the functions are missing), or a built-in-mode
@@ -581,20 +482,17 @@ def append_to_ivf_index(
     split the same corpus across different cells depending on which call
     wrote it — exactly the corruption the spec exists to prevent.
     """
-    if quantize is not None:
-        layout_q = _spec_quantized(
-            read_ivf_spec(df.sparkSession, index_path)
+    spec = layout.read_spec(df.sparkSession, index_path, (layout.IVF,))
+    if quantize is not None and quantize != spec["quantized"]:
+        raise ValueError(
+            f"quantization mismatch: index at {index_path!r} was built "
+            f"with quantize={spec['quantized']}, append presented "
+            f"quantize={quantize} — the code columns are part of the "
+            "layout; omit the argument to follow the spec, or rebuild "
+            "with build_ivf_index(quantize=...) to switch"
         )
-        if quantize != layout_q:
-            raise ValueError(
-                f"quantization mismatch: index at {index_path!r} was built "
-                f"with quantize={layout_q}, append presented "
-                f"quantize={quantize} — the code columns are part of the "
-                "layout; omit the argument to follow the spec, or rebuild "
-                "with build_ivf_index(quantize=...) to switch"
-            )
     tagged = assign_with_index_spec(
-        df, index_path, id_col, vec_col, dot_fn, norm_fn, sim_id
+        df, index_path, id_col, vec_col, dot_fn, norm_fn, sim_id, spec=spec
     )
     tagged.write.mode("append").partitionBy("cell").parquet(index_path)
 
@@ -626,12 +524,9 @@ def assign_with_index_spec(
     contract applied to the coarse layer."""
     spark = df.sparkSession
     if spec is None:
-        spec = read_ivf_spec(spark, index_path)
+        spec = layout.read_spec(spark, index_path, (layout.IVF,))
     if centroids is None:
-        centroids = [
-            (r.cid, list(r.centroid))
-            for r in spark.read.parquet(f"{index_path}_centroids").collect()
-        ]
+        centroids = layout.read_centroids(spark, index_path)
     if not centroids:
         raise ValueError(
             f"{index_path!r} was built over an empty corpus (no centroids, "
@@ -674,7 +569,7 @@ def assign_with_index_spec(
     else:
         cell = _ivf_cell_for_mode(vec_col, centroids, mode, None, None)
         tagged = df.select(F.col(id_col), F.col(vec_col), cell.alias("cell"))
-    if _spec_quantized(spec):
+    if spec["quantized"]:
         # a quantized layout's appends carry codes automatically — the
         # spec IS the quantization config
         tagged = _with_layout_codes(tagged, vec_col)
@@ -734,13 +629,10 @@ def query_ivf_index(
     if num_probes < 1:
         raise ValueError(f"num_probes must be >= 1, got {num_probes}")
     _validate_read_math(
-        _read_ivf_spec_optional(spark, index_path),
+        layout.read_spec(spark, index_path, layout.COARSE_FORMATS),
         dot_fn, norm_fn, sim_id, index_path,
     )
-    centroids = [
-        (r.cid, list(r.centroid))
-        for r in spark.read.parquet(f"{index_path}_centroids").collect()
-    ]
+    centroids = layout.read_centroids(spark, index_path)
     # a query vector of the wrong dimension would rank cells with
     # silently TRUNCATED driver-side dot products (zip stops at the
     # shorter side) and then score candidates to NULL — empty results
@@ -832,18 +724,15 @@ def query_ivf_index_quantized(
         raise ValueError(
             f"rescore_mode must be 'pushdown' or 'join', got {rescore_mode!r}"
         )
-    spec = read_ivf_spec(spark, index_path)
-    if not _spec_quantized(spec):
+    spec = layout.read_spec(spark, index_path, (layout.IVF,))
+    if not spec["quantized"]:
         raise ValueError(
             f"index at {index_path!r} is not a quantized layout (spec has "
-            "quantized=false or predates quantization) — rebuild with "
-            "build_ivf_index(quantize=True), or use query_ivf_index"
+            "quantized=false) — rebuild with build_ivf_index("
+            "quantize=True), or use query_ivf_index"
         )
     _validate_read_math(spec, dot_fn, norm_fn, sim_id, index_path)
-    centroids = [
-        (r.cid, list(r.centroid))
-        for r in spark.read.parquet(f"{index_path}_centroids").collect()
-    ]
+    centroids = layout.read_centroids(spark, index_path)
     index = spark.read.parquet(index_path)
     if not centroids:
         from pyspark.sql.types import DoubleType, StructField, StructType
@@ -933,8 +822,7 @@ def query_ann_index(
     plane family IS the layout, so a mismatched value hashes the query
     into buckets the corpus was never written to and silently returns
     wrong neighbors (round 9: explicit values are validated against the
-    spec and refused on conflict; legacy no-spec layouts fall back to
-    the historical defaults 6/42 when no value is given).
+    spec and refused on conflict; a layout without a spec is refused).
 
     Recall envelope (measured alongside IVF's — see
     :func:`query_ivf_index` and PERF.md round 8): mean recall@20 of
@@ -942,50 +830,25 @@ def query_ann_index(
     planes on the near-random fixture — same probed-fraction story. For
     exhaustive-accurate search use ``probe_hamming = num_planes`` (all
     buckets) or brute_force_topk."""
-    spec = _read_lsh_spec(spark, index_path)
-    if spec is not None:
-        for name, given, pinned in (
-            ("num_planes", num_planes, spec["num_planes"]),
-            ("seed", seed, spec["seed"]),
-        ):
-            if given is not None and given != pinned:
-                raise ValueError(
-                    f"{name}={given} conflicts with the layout spec at "
-                    f"{index_path}_spec ({name}={pinned}) — querying with a "
-                    "different plane family reads buckets the corpus was "
-                    "never written to; omit the argument to use the spec"
-                )
-        num_planes = spec["num_planes"]
-        seed = spec["seed"]
-        if spec["dim"] is not None and len(query_vec) != spec["dim"]:
+    spec = layout.read_spec(spark, index_path, (layout.LSH,))
+    for name, given, pinned in (
+        ("num_planes", num_planes, spec["num_planes"]),
+        ("seed", seed, spec["seed"]),
+    ):
+        if given is not None and given != pinned:
             raise ValueError(
-                f"query vector is {len(query_vec)}-d but the layout's "
-                f"planes are {spec['dim']}-d (spec at {index_path}_spec)"
+                f"{name}={given} conflicts with the layout spec of "
+                f"{index_path!r} ({name}={pinned}) — querying with a "
+                "different plane family reads buckets the corpus was "
+                "never written to; omit the argument to use the spec"
             )
-    else:
-        assumed = [
-            name
-            for name, given in (("num_planes=6", num_planes), ("seed=42", seed))
-            if given is None
-        ]
-        num_planes = 6 if num_planes is None else num_planes
-        seed = 42 if seed is None else seed
-        if assumed:
-            import warnings
-
-            # name ONLY the argument(s) actually defaulted and the full
-            # effective family — the old message claimed both defaults
-            # were assumed even when one was explicitly passed (round-10
-            # ADVICE: a misstated warning is worse than none)
-            warnings.warn(
-                f"{index_path!r} has no persisted spec (pre-spec layout, or "
-                f"a rebuild crashed mid-write): assuming the historical "
-                f"default {' and '.join(assumed)} — effective plane family "
-                f"is num_planes={num_planes}, seed={seed}; pass the missing "
-                "argument explicitly if the layout was built with other "
-                "values",
-                stacklevel=2,
-            )
+    num_planes = spec["num_planes"]
+    seed = spec["seed"]
+    if spec["dim"] is not None and len(query_vec) != spec["dim"]:
+        raise ValueError(
+            f"query vector is {len(query_vec)}-d but the layout's "
+            f"planes are {spec['dim']}-d (spec of {index_path!r})"
+        )
     qsig = _signature_of(query_vec, num_planes, seed)
     # true multiprobe: every bucket within probe_hamming bit flips of the
     # query signature (a 1-flip-only loop silently capped the radius —
@@ -1208,26 +1071,20 @@ def semantic_dedup_on_index(
         semantic_pairs_from_cells,
     )
 
+    spec = layout.read_spec(spark, index_path, layout.COARSE_FORMATS)
     index = spark.read.parquet(index_path)
-    if "cell" not in index.columns:
-        raise ValueError(
-            f"{index_path!r} is not an IVF layout (no 'cell' column) — "
-            "build it with build_ivf_index first"
-        )
     if use_codes:
-        spec = _read_ivf_spec_optional(spark, index_path)
-        if not _spec_quantized(spec):
+        if not spec.get("quantized"):
             raise ValueError(
                 f"use_codes=True needs a quantized layout, but the index "
                 f"at {index_path!r} has no code columns (spec "
-                "quantized=false or missing) — rebuild with "
+                "quantized=false or absent) — rebuild with "
                 "build_ivf_index(quantize=True)"
             )
         return removal_verdicts(
             _quantized_pairs_from_cells(
                 index, threshold, id_col, vec_col, max_cluster,
-                dot_fn, norm_fn, skew_observation,
-                dim=(spec or {}).get("dim"),
+                dot_fn, norm_fn, skew_observation, dim=spec["dim"],
             )
         )
     pairs = semantic_pairs_from_cells(
@@ -1376,17 +1233,11 @@ def ivf_knn_join(
         )
     pq_codebook = None
     if use_pq:
-        from cassandra_analytics_spark.operators.pq import (
-            _resolve_ivf_pq_codebook,
-            read_ivf_pq_spec,
-        )
-
-        pq_spec = read_ivf_pq_spec(spark, index_path)
-        # the spec is normalized with assignment/sim_id keys, so the
-        # pinned mixed-math READ contract applies verbatim: read-time
-        # rescore math is a free choice, a presented sim_id is
-        # validated, a custom-assignment layout read without naming
-        # its sim_id warns
+        pq_spec = layout.read_spec(spark, index_path, (layout.IVF_PQ,))
+        # the IVF-PQ spec carries assignment/sim_id too, so the pinned
+        # mixed-math READ contract applies verbatim: read-time rescore
+        # math is a free choice, a presented sim_id is validated, a
+        # custom-assignment layout read without naming its sim_id warns
         _validate_read_math(pq_spec, dot_fn, norm_fn, sim_id, index_path)
         if not pq_spec["keep_vec"]:
             raise ValueError(
@@ -1394,8 +1245,8 @@ def ivf_knn_join(
                 "archival layout) — the kNN join's exact phase 2 needs the "
                 "float column; rebuild with keep_vec=True"
             )
-        pq_codebook = _resolve_ivf_pq_codebook(
-            spark, index_path, pq_spec, None, caller="ivf_knn_join"
+        pq_codebook = layout.read_codebook(
+            spark, index_path, pq_spec, caller="ivf_knn_join"
         )
         # residual-encoded layout (round 15): q·x̂ = q·centroid[cell] +
         # ADC(q, residual codes) — the per-(query, cell) anchor term
@@ -1403,18 +1254,15 @@ def ivf_knn_join(
         pq_residual = pq_spec["encoding"] == "residual"
     else:
         pq_residual = False
-        spec = _read_ivf_spec_optional(spark, index_path)
+        spec = layout.read_spec(spark, index_path, layout.COARSE_FORMATS)
         _validate_read_math(spec, dot_fn, norm_fn, sim_id, index_path)
-        if use_codes and not _spec_quantized(spec):
+        if use_codes and not spec.get("quantized"):
             raise ValueError(
                 f"use_codes=True needs a quantized layout, but the index at "
                 f"{index_path!r} has no code columns (spec quantized=false "
-                "or missing) — rebuild with build_ivf_index(quantize=True)"
+                "or absent) — rebuild with build_ivf_index(quantize=True)"
             )
-    centroids = [
-        (r.cid, list(r.centroid))
-        for r in spark.read.parquet(f"{index_path}_centroids").collect()
-    ]
+    centroids = layout.read_centroids(spark, index_path)
     index = spark.read.parquet(index_path)
     # id types derive from the INPUTS so the empty-result schema agrees
     # with the non-empty path and non-long ids survive createDataFrame
@@ -1680,14 +1528,6 @@ def ivf_knn_join(
     return out
 
 
-_ANN_FORMAT_PARTITION_COL = {
-    "ann-lsh-v1": "sig",
-    "ivf-v1": "cell",
-    "pq-v1": None,
-    "ivf-pq-v1": "cell",
-}
-
-
 def compact_ann_index(
     spark: SparkSession,
     index_path: str,
@@ -1712,8 +1552,7 @@ def compact_ann_index(
     compaction — read amplification drops from O(#batches) to 1).
 
     MID-REWRITE REFUSAL (the save_* delete-spec-first discipline): the
-    spec is STASHED aside (rename to ``{index_path}_spec__compacting``)
-    before the data rewrite and renamed back after the swap, so a
+    spec is STASHED aside (renamed to ``layout.stash_path``) before the data rewrite and renamed back after the swap, so a
     concurrent or post-crash read finds a spec-less layout and refuses
     LOUDLY instead of reading a half-rewritten one; a crash leaves the
     stashed spec next to the layout for explicit operator recovery
@@ -1730,8 +1569,6 @@ def compact_ann_index(
 
     Returns ``{"format", "files_before", "files_after"}`` (parquet data
     files only)."""
-    from pyspark.errors import AnalysisException
-
     from cassandra_analytics_spark.fs import (
         delete_path,
         glob_exists,
@@ -1743,27 +1580,8 @@ def compact_ann_index(
         raise ValueError(
             f"files_per_partition must be >= 1, got {files_per_partition}"
         )
-    spec_path = f"{index_path}_spec"
-    try:
-        rows = spark.read.parquet(spec_path).collect()
-    except AnalysisException:
-        raise ValueError(
-            f"{index_path!r} has no persisted spec ({spec_path}) — not a "
-            "persisted ANN layout (or a rebuild/compaction crashed "
-            "mid-write; rebuild, or restore the _spec__compacting stash)"
-        ) from None
-    if len(rows) != 1:
-        raise ValueError(
-            f"corrupt spec at {spec_path}: expected exactly one row, "
-            f"found {len(rows)}"
-        )
-    fmt = rows[0].asDict().get("format")
-    if fmt not in _ANN_FORMAT_PARTITION_COL:
-        raise ValueError(
-            f"spec at {spec_path} has unknown layout format {fmt!r} — "
-            f"compactable formats: {sorted(_ANN_FORMAT_PARTITION_COL)}"
-        )
-    pcol = _ANN_FORMAT_PARTITION_COL[fmt]
+    fmt = layout.read_spec(spark, index_path, layout.FORMATS)["format"]
+    pcol = layout.PARTITION_COL[fmt]
     # empty-corpus builds write UNpartitioned (the partition column is a
     # data column) — detect from the directory shape, not the format
     partitioned = pcol is not None and glob_exists(
@@ -1775,7 +1593,8 @@ def compact_ann_index(
 
     # stash the spec FIRST: from here until the final rename-back, every
     # read/append path refuses the layout (missing spec)
-    stash = f"{spec_path}__compacting"
+    spec_path = layout.spec_path(index_path)
+    stash = layout.stash_path(index_path)
     delete_path(spark, stash)
     if not rename_path(spark, spec_path, stash):
         raise ValueError(

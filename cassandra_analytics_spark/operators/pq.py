@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cassandra_analytics_spark.local_data import local_df
+from cassandra_analytics_spark.operators import layout
 from cassandra_analytics_spark.operators.similarity import lit_vector
 
 
@@ -968,9 +969,6 @@ def pq_adc_topk(
     )
 
 
-_PQ_SPEC_SCHEMA = "format string, dim int, m int, ks int, keep_vec boolean"
-
-
 def save_pq_index(
     df: DataFrame,
     index_path: str,
@@ -986,90 +984,36 @@ def save_pq_index(
 ) -> PQCodebook:
     """Materialize a PQ-encoded corpus as a PERSISTED layout — the PQ
     twin of the LSH/IVF layouts' spec discipline: the encoded table at
-    ``index_path``, the codebook at ``{index_path}_codebook`` (one row
-    per (subspace, code) centroid — metadata-sized), and a spec at
-    ``{index_path}_spec`` pinning (dim, m, ks, keep_vec) so reads
-    refuse a layout whose geometry they cannot honor. ``codebook=None``
+    ``index_path``, the codebook sidecar (one row per (subspace, code)
+    centroid — metadata-sized), and a spec pinning (dim, m, ks,
+    keep_vec) so reads refuse a layout whose geometry they cannot
+    honor. ``codebook=None``
     trains one here (:func:`train_pq_codebook`); passing one reuses an
     external fit. ``keep_vec=False`` drops the float column — 
     approximate-only reads at m bytes + one double per row (the
     archival-tier shape); ``query_pq_index`` then refuses rescore
     requests LOUDLY instead of silently returning approximate scores.
 
-    The spec is deleted before the layout overwrite (crash mid-rebuild
-    leaves a detectably spec-less layout, the LSH/IVF convention)."""
+    The sidecars are deleted before the layout overwrite (crash
+    mid-rebuild leaves a detectably spec-less layout, the LSH/IVF
+    convention — :func:`~cassandra_analytics_spark.operators.layout.
+    delete_sidecars`)."""
     spark = df.sparkSession
     if codebook is None:
         codebook = train_pq_codebook(
             df, vec_col=vec_col, m=m, ks=ks, sample_size=sample_size,
             iterations=iterations, seed=seed, id_col=id_col,
         )
-    from cassandra_analytics_spark.fs import delete_path
-
-    delete_path(spark, f"{index_path}_spec")
+    layout.delete_sidecars(spark, index_path)
     pq_encode(
         df, codebook, id_col=id_col, vec_col=vec_col, keep_vec=keep_vec
     ).write.mode("overwrite").parquet(index_path)
-    cb_rows = [
-        (i, j, list(codebook.centroids[i][j]))
-        for i in range(codebook.m)
-        for j in range(codebook.ks)
-    ]
-    local_df(
-        spark, cb_rows, "sub int, code int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}_codebook")
-    local_df(
-        spark,
-        [("pq-v1", codebook.dim, codebook.m, codebook.ks, keep_vec)],
-        _PQ_SPEC_SCHEMA,
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}_spec")
+    layout.write_codebook(spark, index_path, codebook)
+    layout.write_spec(
+        spark, index_path, layout.PQ,
+        dim=codebook.dim, m=codebook.m, ks=codebook.ks, keep_vec=keep_vec,
+    )
     return codebook
-
-
-def read_pq_spec(spark, index_path: str) -> dict:
-    """The persisted spec of a PQ layout; loud on missing/corrupt."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        rows = spark.read.parquet(f"{index_path}_spec").collect()
-    except AnalysisException:
-        raise ValueError(
-            f"{index_path!r} has no persisted PQ spec "
-            f"({index_path}_spec) — not a save_pq_index layout (or a "
-            "rebuild crashed mid-write; rebuild with save_pq_index)"
-        ) from None
-    if len(rows) != 1 or rows[0]["format"] != "pq-v1":
-        raise ValueError(
-            f"corrupt PQ spec at {index_path}_spec: expected one "
-            f"'pq-v1' row, found {rows!r}"
-        )
-    return rows[0].asDict()
-
-
-def load_pq_codebook(spark, index_path: str) -> PQCodebook:
-    """Rehydrate the trained codebook of a persisted layout (bounded
-    collect — m x ks rows of metadata, the centroid-table convention)."""
-    spec = read_pq_spec(spark, index_path)
-    rows = spark.read.parquet(f"{index_path}_codebook").collect()
-    want = spec["m"] * spec["ks"]
-    if len(rows) != want:
-        raise ValueError(
-            f"corrupt PQ codebook at {index_path}_codebook: spec says "
-            f"m={spec['m']} x ks={spec['ks']} = {want} centroids, found "
-            f"{len(rows)}"
-        )
-    books: dict[int, dict[int, tuple]] = {}
-    for r in rows:
-        books.setdefault(r["sub"], {})[r["code"]] = tuple(
-            float(v) for v in r["centroid"]
-        )
-    cents = tuple(
-        tuple(books[i][j] for j in range(spec["ks"]))
-        for i in range(spec["m"])
-    )
-    return PQCodebook(
-        dim=spec["dim"], m=spec["m"], ks=spec["ks"], centroids=cents
-    )
 
 
 def query_pq_index(
@@ -1098,18 +1042,10 @@ def query_pq_index(
     100x soak measured the per-call m·ks rehydration collect as real
     per-query overhead); it must MATCH the layout's spec geometry —
     a mismatched preload is refused, not silently mis-decoded."""
-    spec = read_pq_spec(spark, index_path)
-    if codebook is None:
-        codebook = load_pq_codebook(spark, index_path)
-    elif (codebook.dim, codebook.m, codebook.ks) != (
-        spec["dim"], spec["m"], spec["ks"]
-    ):
-        raise ValueError(
-            f"query_pq_index: preloaded codebook geometry "
-            f"(dim={codebook.dim}, m={codebook.m}, ks={codebook.ks}) does "
-            f"not match the layout spec (dim={spec['dim']}, m={spec['m']}, "
-            f"ks={spec['ks']}) at {index_path!r}"
-        )
+    spec = layout.read_spec(spark, index_path, (layout.PQ,))
+    codebook = layout.read_codebook(
+        spark, index_path, spec, codebook, caller="query_pq_index"
+    )
     if rescore and not spec["keep_vec"]:
         raise ValueError(
             f"{index_path!r} was saved with keep_vec=False (codes-only "
@@ -1152,30 +1088,14 @@ def append_to_pq_index(
     whose length differs from the spec's dim raises loudly inside the
     encode batch (``pq_encode``'s guard)."""
     spark = df.sparkSession
-    spec = read_pq_spec(spark, index_path)
-    if codebook is None:
-        codebook = load_pq_codebook(spark, index_path)
-    elif (codebook.dim, codebook.m, codebook.ks) != (
-        spec["dim"], spec["m"], spec["ks"]
-    ):
-        raise ValueError(
-            f"append_to_pq_index: preloaded codebook geometry "
-            f"(dim={codebook.dim}, m={codebook.m}, ks={codebook.ks}) does "
-            f"not match the layout spec (dim={spec['dim']}, m={spec['m']}, "
-            f"ks={spec['ks']}) at {index_path!r} — codes from a different "
-            "codebook would silently mis-decode"
-        )
+    spec = layout.read_spec(spark, index_path, (layout.PQ,))
+    codebook = layout.read_codebook(
+        spark, index_path, spec, codebook, caller="append_to_pq_index"
+    )
     pq_encode(
         df, codebook, id_col=id_col, vec_col=vec_col,
         keep_vec=spec["keep_vec"],
     ).write.mode("append").parquet(index_path)
-
-
-_IVF_PQ_SPEC_SCHEMA = (
-    "format string, dim int, m int, ks int, num_centroids int, "
-    "keep_vec boolean, assignment string, sim_id string, "
-    "residuals boolean, encoding string"
-)
 
 
 def _anchor_joined(tagged: DataFrame, centroids, anchor_col: str) -> DataFrame:
@@ -1219,7 +1139,7 @@ def save_ivf_pq_index(
     PQ-encoded inside every cell (the PQ side — the pruned scan reads
     m bytes + one double per row). Self-contained over the same layout
     discipline as :func:`save_pq_index`: spec (``ivf-pq-v1``) + coarse
-    centroid table + codebook persist beside the data, spec deleted
+    centroid table + codebook persist beside the data, sidecars deleted
     first so a torn rebuild is detectable.
 
     ``centroids=None`` samples ``num_centroids`` coarse centroids
@@ -1269,7 +1189,6 @@ def save_ivf_pq_index(
     (their symmetric code-vs-code scorer has no anchor channel — use
     encoding="raw" for stream-maintained layouts). The mode is pinned
     in the spec; appends follow it automatically."""
-    from cassandra_analytics_spark.fs import delete_path
     from cassandra_analytics_spark.operators.similarity import (
         assign_nearest_cells,
         sample_centroids,
@@ -1374,7 +1293,7 @@ def save_ivf_pq_index(
             df, vec_col=vec_col, m=m, ks=ks, sample_size=sample_size,
             iterations=iterations, seed=seed, id_col=id_col,
         )
-    delete_path(spark, f"{index_path}_spec")
+    layout.delete_sidecars(spark, index_path)
     encoded = pq_encode(
         tagged, codebook, id_col=id_col, vec_col=vec_col, keep_vec=True,
         with_residual=residuals, anchor_col=anchor, extra_cols=("cell",),
@@ -1382,107 +1301,16 @@ def save_ivf_pq_index(
     if not keep_vec:
         encoded = encoded.drop(vec_col)
     encoded.write.mode("overwrite").partitionBy("cell").parquet(index_path)
-    local_df(
-        spark, centroids, "cid int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}_centroids")
-    cb_rows = [
-        (i, j, list(codebook.centroids[i][j]))
-        for i in range(codebook.m)
-        for j in range(codebook.ks)
-    ]
-    local_df(
-        spark, cb_rows, "sub int, code int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}_codebook")
-    local_df(
-        spark,
-        [("ivf-pq-v1", codebook.dim, codebook.m, codebook.ks,
-          len(centroids), keep_vec, assignment, sim_id, residuals,
-          encoding)],
-        _IVF_PQ_SPEC_SCHEMA,
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}_spec")
-    return centroids, codebook
-
-
-def _normalize_ivf_pq_spec(spec: dict) -> dict:
-    """Back-fill the contract fields older layouts lack, on a COPY of an
-    already-format-verified ``ivf-pq-v1`` spec row dict — shared by
-    :func:`read_ivf_pq_spec` and callers that hold the raw spec row
-    already (the streaming trigger's per-stream metadata cache, r16)."""
-    spec = dict(spec)
-    # layouts written before round 14 lack the assignment/residual
-    # fields — normalize so every reader sees the full contract
-    spec.setdefault("assignment", "expr")
-    spec.setdefault("sim_id", None)
-    spec.setdefault("residuals", False)
-    # layouts written before round 15 are raw-encoded by construction
-    if spec.get("encoding") is None:
-        spec["encoding"] = "raw"
-    return spec
-
-
-def read_ivf_pq_spec(spark, index_path: str) -> dict:
-    """The persisted spec of an IVF-PQ layout; loud on missing/corrupt
-    (including a plain-PQ layout presented at an IVF-PQ read path)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        rows = spark.read.parquet(f"{index_path}_spec").collect()
-    except AnalysisException:
-        raise ValueError(
-            f"{index_path!r} has no persisted spec ({index_path}_spec) — "
-            "not a save_ivf_pq_index layout (or a rebuild crashed "
-            "mid-write; rebuild)"
-        ) from None
-    if len(rows) != 1 or rows[0].asDict().get("format") != "ivf-pq-v1":
-        raise ValueError(
-            f"spec at {index_path}_spec is not an IVF-PQ layout "
-            f"(expected one 'ivf-pq-v1' row, found {rows!r}) — flat PQ "
-            "layouts read through query_pq_index"
-        )
-    return _normalize_ivf_pq_spec(rows[0].asDict())
-
-
-def _resolve_ivf_pq_codebook(
-    spark,
-    index_path: str,
-    spec: dict,
-    codebook: PQCodebook | None,
-    caller: str,
-) -> PQCodebook:
-    """Rehydrate an IVF-PQ layout's trained codebook (bounded m·ks
-    metadata collect), or validate a caller-preloaded one against the
-    spec geometry — shared by the query and append paths so both
-    refuse a mismatched preload identically."""
-    if codebook is not None:
-        if (codebook.dim, codebook.m, codebook.ks) != (
-            spec["dim"], spec["m"], spec["ks"]
-        ):
-            raise ValueError(
-                f"{caller}: preloaded codebook geometry "
-                f"(dim={codebook.dim}, m={codebook.m}, ks={codebook.ks}) "
-                f"does not match the layout spec (dim={spec['dim']}, "
-                f"m={spec['m']}, ks={spec['ks']}) at {index_path!r}"
-            )
-        return codebook
-    rows = spark.read.parquet(f"{index_path}_codebook").collect()
-    want = spec["m"] * spec["ks"]
-    if len(rows) != want:
-        raise ValueError(
-            f"corrupt PQ codebook at {index_path}_codebook: spec "
-            f"says {want} centroids, found {len(rows)}"
-        )
-    books: dict[int, dict[int, tuple]] = {}
-    for r in rows:
-        books.setdefault(r["sub"], {})[r["code"]] = tuple(
-            float(v) for v in r["centroid"]
-        )
-    return PQCodebook(
-        dim=spec["dim"], m=spec["m"], ks=spec["ks"],
-        centroids=tuple(
-            tuple(books[i][j] for j in range(spec["ks"]))
-            for i in range(spec["m"])
-        ),
+    layout.write_centroids(spark, index_path, centroids)
+    layout.write_codebook(spark, index_path, codebook)
+    layout.write_spec(
+        spark, index_path, layout.IVF_PQ,
+        dim=codebook.dim, m=codebook.m, ks=codebook.ks,
+        num_centroids=len(centroids), keep_vec=keep_vec,
+        assignment=assignment, sim_id=sim_id, residuals=residuals,
+        encoding=encoding,
     )
+    return centroids, codebook
 
 
 def assign_with_ivf_pq_spec(
@@ -1523,20 +1351,17 @@ def assign_with_ivf_pq_spec(
 
     spark = df.sparkSession
     if spec is None:
-        spec = read_ivf_pq_spec(spark, index_path)
-    codebook = _resolve_ivf_pq_codebook(
+        spec = layout.read_spec(spark, index_path, (layout.IVF_PQ,))
+    codebook = layout.read_codebook(
         spark, index_path, spec, codebook, caller="assign_with_ivf_pq_spec"
     )
     if centroids is None:
-        centroids = [
-            (int(r.cid), [float(x) for x in r.centroid])
-            for r in spark.read.parquet(f"{index_path}_centroids").collect()
-        ]
+        centroids = layout.read_centroids(spark, index_path)
     centroids = sorted(centroids, key=lambda t: t[0])
     if not centroids:
         raise ValueError(
-            f"assign_with_ivf_pq_spec: no coarse centroids at "
-            f"{index_path}_centroids — corrupt layout; rebuild with "
+            f"assign_with_ivf_pq_spec: no coarse centroids in the layout "
+            f"at {index_path!r} — corrupt layout; rebuild with "
             "save_ivf_pq_index"
         )
     mode = spec["assignment"]
@@ -1616,11 +1441,11 @@ def append_to_ivf_pq_index(
     ``codebook=`` must match the spec geometry exactly (shared refusal
     with :func:`query_ivf_pq_index`); custom-math layouts demand their
     pinned sim_id (see :func:`assign_with_ivf_pq_spec`)."""
-    spark = df.sparkSession
-    spec = read_ivf_pq_spec(spark, index_path)
+    spec = layout.read_spec(df.sparkSession, index_path, (layout.IVF_PQ,))
     tagged = assign_with_ivf_pq_spec(
         df, index_path, id_col=id_col, vec_col=vec_col,
         dot_fn=dot_fn, norm_fn=norm_fn, sim_id=sim_id, codebook=codebook,
+        spec=spec,
     )
     if not spec["keep_vec"]:
         tagged = tagged.drop(vec_col)
@@ -1668,7 +1493,7 @@ def query_ivf_pq_index(
 
     if num_probes < 1:
         raise ValueError(f"num_probes must be >= 1, got {num_probes}")
-    spec = read_ivf_pq_spec(spark, index_path)
+    spec = layout.read_spec(spark, index_path, (layout.IVF_PQ,))
     _validate_read_math(spec, dot_fn, norm_fn, sim_id, index_path)
     if rescore and not spec["keep_vec"]:
         raise ValueError(
@@ -1676,13 +1501,10 @@ def query_ivf_pq_index(
             "archival layout) — pass rescore=False, or rebuild with "
             "keep_vec=True"
         )
-    codebook = _resolve_ivf_pq_codebook(
+    codebook = layout.read_codebook(
         spark, index_path, spec, codebook, caller="query_ivf_pq_index"
     )
-    centroids = [
-        (r.cid, list(r.centroid))
-        for r in spark.read.parquet(f"{index_path}_centroids").collect()
-    ]
+    centroids = layout.read_centroids(spark, index_path)
     qv = [float(x) for x in query_vec]
     cells = nearest_cells_for(qv, centroids, num_probes)
     qdf = spark.read.parquet(index_path).filter(F.col("cell").isin(cells))

@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from cassandra_analytics_spark.operators import layout
 from cassandra_analytics_spark.operators.ann_index import (
     assign_with_index_spec,
     build_ivf_index,
@@ -325,19 +326,18 @@ def process_semantic_batch(
                 codebook_cache[key] = v
         return v
 
-    from cassandra_analytics_spark.operators.ann_index import (
-        _read_ivf_spec_optional,
-    )
-
     try:
         raw_spec = _cached_meta(
             "ivf_spec",
-            lambda: _read_ivf_spec_optional(spark, index_path),
+            lambda: layout.read_spec(
+                spark, index_path, layout.COARSE_FORMATS
+            ),
         )
-    except ValueError:
-        # corrupt spec == absent for bootstrap purposes: the overwrite
-        # IS the recovery (exactly _spec_exists's pre-r16 behavior —
-        # read_ivf_spec's ValueError was caught there too)
+    except layout.LayoutSpecError as e:
+        if e.found_format is not None:
+            raise  # another kind of layout lives here: never overwrite it
+        # missing or corrupt spec == absent for bootstrap purposes: the
+        # overwrite IS the recovery
         raw_spec = None
     if raw_spec is None:
         # bootstrap: the first batch IS the corpus — build the layout
@@ -391,7 +391,7 @@ def process_semantic_batch(
         ).parquet(out_dir)
         return
 
-    is_pq_layout = raw_spec.get("format") == "ivf-pq-v1"
+    is_pq_layout = raw_spec["format"] == layout.IVF_PQ
     if pq is not None and not is_pq_layout:
         raise ValueError(
             f"pq= was passed but the layout at {index_path!r} is not an "
@@ -404,21 +404,15 @@ def process_semantic_batch(
             "is an IVF-PQ layout — drop quantize to follow the spec"
         )
 
-    def _load_centroids():
-        return sorted(
-            (int(r.cid), [float(x) for x in r.centroid])
-            for r in spark.read.parquet(
-                f"{index_path}_centroids"
-            ).collect()
-        )
-
-    cents = _cached_meta("ivf_centroids", _load_centroids)
+    cents = _cached_meta(
+        "ivf_centroids", lambda: layout.read_centroids(spark, index_path)
+    )
     # the codebook's norms are as frozen as the codebook: computed with
     # the layout's own norm expression ONCE per stream instead of a
     # k-row job per trigger (r17; only the custom-math mode consumes
     # them — built-in modes fold norms into the assignment expression)
     cnorms = None
-    if raw_spec.get("assignment") == "custom":
+    if raw_spec["assignment"] == "custom":
         from cassandra_analytics_spark.operators.similarity import (
             centroid_norms,
         )
@@ -430,12 +424,9 @@ def process_semantic_batch(
     pq_cb = None
     if is_pq_layout:
         from cassandra_analytics_spark.operators.pq import (
-            _normalize_ivf_pq_spec,
-            _resolve_ivf_pq_codebook,
             assign_with_ivf_pq_spec,
         )
 
-        pq_spec = _normalize_ivf_pq_spec(raw_spec)
         cache_key = ("pq_codebook", index_path)
         pq_cb = (
             codebook_cache.get(cache_key)
@@ -443,16 +434,16 @@ def process_semantic_batch(
             else None
         )
         if pq_cb is None:
-            pq_cb = _resolve_ivf_pq_codebook(
-                spark, index_path, pq_spec,
-                None, caller="process_semantic_batch",
+            pq_cb = layout.read_codebook(
+                spark, index_path, raw_spec,
+                caller="process_semantic_batch",
             )
             if codebook_cache is not None:
                 codebook_cache[cache_key] = pq_cb
         assigned = assign_with_ivf_pq_spec(
             batch, index_path, id_col=id_col, vec_col=vec_col,
             dot_fn=dot_fn, norm_fn=norm_fn, sim_id=sim_id,
-            codebook=pq_cb, spec=pq_spec, centroids=cents,
+            codebook=pq_cb, spec=raw_spec, centroids=cents,
             cnorms=cnorms,
         ).withColumn("__nrm", row_norm_auto(normf)(F.col(vec_col)))
     else:
@@ -494,16 +485,14 @@ def _publish_and_append(
     # broadcasts, so its win is the codes-only corpus SCAN.
     from cassandra_analytics_spark.operators.ann_index import (
         _quantized_pairs_from_cells,
-        _read_ivf_spec_optional,
-        _spec_quantized,
     )
 
     if raw_spec is None:
         # direct callers without the trigger's cached spec (tests, ad
         # hoc batches) pay the read, exactly the pre-r16 behavior
-        raw_spec = _read_ivf_spec_optional(spark, index_path)
-    is_pq = (raw_spec or {}).get("format") == "ivf-pq-v1"
-    quantized = (not is_pq) and _spec_quantized(raw_spec)
+        raw_spec = layout.read_spec(spark, index_path, layout.COARSE_FORMATS)
+    is_pq = raw_spec["format"] == layout.IVF_PQ
+    quantized = (not is_pq) and raw_spec["quantized"]
     # within-batch pairs (shared expansion: same-id pairs dropped,
     # over-cap cells skipped); the assigned batch of a coded layout
     # carries its codes already (assign_with_index_spec /
@@ -514,11 +503,10 @@ def _publish_and_append(
     # float), because this exchange dominates the trigger
     if is_pq:
         from cassandra_analytics_spark.operators.pq import (
-            _resolve_ivf_pq_codebook,
             pq_pairs_from_cells,
         )
 
-        if not raw_spec.get("residuals"):
+        if not raw_spec["residuals"]:
             raise ValueError(
                 f"IVF-PQ layout at {index_path!r} was saved without "
                 "residuals=True — the streaming prefilters' per-row "
@@ -528,7 +516,7 @@ def _publish_and_append(
         # a caller-passed codebook (the stream's per-trigger cache) is
         # geometry-validated, not re-collected; None falls back to the
         # per-call rehydration (ad-hoc single-batch callers)
-        pq_codebook = _resolve_ivf_pq_codebook(
+        pq_codebook = layout.read_codebook(
             spark, index_path, raw_spec, pq_codebook,
             caller="_publish_and_append",
         )
@@ -542,13 +530,13 @@ def _publish_and_append(
         in_pairs = pq_pairs_from_cells(
             assigned, pq_codebook, threshold, id_col, vec_col,
             max_cluster=max_cell, dot_fn=dot_fn, norm_fn=norm_fn,
-            encoding=raw_spec.get("encoding") or "raw",
+            encoding=raw_spec["encoding"],
         )
     elif quantized:
         in_pairs = _quantized_pairs_from_cells(
             assigned, threshold, id_col, vec_col, max_cell,
             dot_fn, norm_fn, None,
-            dim=(raw_spec or {}).get("dim"),
+            dim=raw_spec["dim"],
         )
     else:
         in_pairs = semantic_pairs_from_cells(
@@ -574,7 +562,7 @@ def _publish_and_append(
         cross = _cross_pairs_quantized(
             spark, assigned, index_path, touched, threshold,
             id_col, vec_col, dotf, normf, max_cell,
-            dim=(raw_spec or {}).get("dim"),
+            dim=raw_spec["dim"],
         )
     else:
         cross = _cross_pairs_float(
@@ -870,23 +858,21 @@ def _cross_pairs_pq(
     computed in the pre-expansion scan); bound and confirm unchanged,
     verdicts float-identical."""
     from cassandra_analytics_spark.operators.pq import (
-        _resolve_ivf_pq_codebook,
         pq_code_sqnorm_col,
         pq_sym_recon_dot,
     )
 
-    if not spec.get("residuals"):
+    if not spec["residuals"]:
         raise ValueError(
             f"IVF-PQ layout at {index_path!r} was saved without "
             "residuals=True — the streaming prefilter's per-row bound "
             "needs pq_tnorm/pq_err; rebuild with save_ivf_pq_index("
             "residuals=True)"
         )
-    codebook = _resolve_ivf_pq_codebook(
+    codebook = layout.read_codebook(
         spark, index_path, spec, codebook, caller="_cross_pairs_pq"
     )
-    encoding = spec.get("encoding") or "raw"
-    residual_enc = encoding == "residual"
+    residual_enc = spec["encoding"] == "residual"
     corpus = spark.read.parquet(index_path).filter(
         F.col("cell").isin(touched)
     )
@@ -950,7 +936,7 @@ def _cross_pairs_pq(
         F.col("__bnh"), F.col("__cnh"),
         F.col("__bds") if residual_enc else None,
         F.col("__cds") if residual_enc else None,
-        encoding=encoding,
+        encoding=spec["encoding"],
     )
     approx = F.try_divide(adc, F.col("__btn") * F.col("__ctn"))
     margin = F.try_divide(

@@ -34,6 +34,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from cassandra_analytics_spark.operators.layout import read_centroids
 from cassandra_analytics_spark.session import get_session
 from cassandra_analytics_spark.stage_metrics import delta, stage_totals
 
@@ -92,10 +93,7 @@ def main() -> int:
         print(f"SQ8 index built in {time.time() - t0:.1f}s", flush=True)
         # the IVF-PQ layout shares the SQ8 layout's coarse centroids so
         # the three paths route identically (cells are comparable)
-        cents = [
-            (r.cid, list(r.centroid))
-            for r in spark.read.parquet(f"{path}_centroids").collect()
-        ]
+        cents = read_centroids(spark, path)
         pq_path = os.path.join(work, "ivfpq")
         t0 = time.time()
         save_ivf_pq_index(

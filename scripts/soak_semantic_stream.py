@@ -31,7 +31,7 @@ def main() -> int:
     n_batches = int(sys.argv[1]) if len(sys.argv) > 1 else 25
     dim, per_batch = 16, 40
 
-    from cassandra_analytics_spark.operators.ann_index import read_ivf_spec
+    from cassandra_analytics_spark.operators.layout import IVF, read_spec
     from cassandra_analytics_spark.operators.similarity import (
         removal_verdicts,
         semantic_dedup_pairs,
@@ -128,7 +128,7 @@ def main() -> int:
     layout = spark.read.parquet(os.path.join(tmp, "ivf"))
     n_layout = layout.count()
     n_distinct = layout.select("vec_id").distinct().count()
-    spec = read_ivf_spec(spark, os.path.join(tmp, "ivf"))
+    spec = read_spec(spark, os.path.join(tmp, "ivf"), (IVF,))
     v_got = {
         tuple(r)
         for r in removal_verdicts(

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from cassandra_analytics_spark.session import get_session
@@ -80,9 +82,28 @@ _SLOW_TESTS = {
 
 
 def pytest_collection_modifyitems(config, items):
+    collected: dict[str, set[str]] = {}  # file -> its collected nodeids
     for item in items:
-        nodeid = item.nodeid
-        if nodeid.startswith("tests/"):
-            nodeid = nodeid[len("tests/"):]
+        nodeid = item.nodeid.removeprefix("tests/")
         if nodeid in _SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+        collected.setdefault(nodeid.split("::")[0], set()).add(nodeid)
+    # an entry whose test was deleted or renamed would silently drop out
+    # of the slow lane's bookkeeping: refuse it in every file collected
+    # whole (a run that selects single tests of a file cannot tell)
+    partial = {
+        os.path.basename(arg.split("::")[0])
+        for arg in config.args
+        if "::" in arg
+    }
+    stale = sorted(
+        entry
+        for entry in _SLOW_TESTS
+        if (path := entry.split("::")[0]) in collected
+        and path not in partial
+        and entry not in collected[path]
+    )
+    if stale:
+        raise pytest.UsageError(
+            f"_SLOW_TESTS names tests that were not collected: {stale}"
+        )

@@ -274,7 +274,7 @@ def test_semantic_dedup_on_index_matches_direct(spark, tmp_path):
         assert got == direct
         assert (1, 0) in got
 
-    with pytest.raises(ValueError, match="not an IVF layout"):
+    with pytest.raises(ValueError, match="no persisted spec"):
         lsh = str(tmp_path / "not-ivf")
         spark.createDataFrame([(1, [1.0])], "vec_id long, embedding array<double>").write.parquet(lsh)
         semantic_dedup_on_index(spark, lsh)
@@ -298,8 +298,8 @@ def test_append_equals_rebuild(spark, tmp_path, mode):
     from cassandra_analytics_spark.operators.ann_index import (
         append_to_ivf_index,
         build_ivf_index,
-        read_ivf_spec,
     )
+    from cassandra_analytics_spark.operators.layout import IVF, read_spec
 
     both = _tiny_corpus(spark, range(40))
     a = both.filter(F.col("vec_id") < 20)
@@ -323,21 +323,20 @@ def test_append_equals_rebuild(spark, tmp_path, mode):
         for r in spark.read.parquet(full_path).select("vec_id", "cell").collect()
     }
     assert inc == full and len(inc) == 40
-    spec = read_ivf_spec(spark, inc_path)
+    spec = read_spec(spark, inc_path, (IVF,))
     assert spec["assignment"] == mode and spec["dim"] == 8
 
 
 def test_append_custom_math_and_spec_mismatches(spark, tmp_path):
     """Spec pinning: a custom-math index demands the same sim_id (and
     functions) on append; built-in-mode indexes refuse custom math;
-    legacy layouts without a spec refuse appends; empty layouts refuse
-    appends; ragged appended vectors die loudly."""
+    empty layouts refuse appends; ragged appended vectors die loudly."""
     from cassandra_analytics_spark.operators.ann_index import (
         append_to_ivf_index,
         build_ivf_index,
-        read_ivf_spec,
         semantic_dedup_on_index,
     )
+    from cassandra_analytics_spark.operators.layout import IVF, read_spec
     from cassandra_analytics_spark.operators.similarity import dot as sdot
     from cassandra_analytics_spark.operators.similarity import norm as snorm
 
@@ -364,7 +363,7 @@ def test_append_custom_math_and_spec_mismatches(spark, tmp_path):
         for r in spark.read.parquet(fpath).select("vec_id", "cell").collect()
     }
     assert inc == full and len(inc) == 30
-    assert read_ivf_spec(spark, cpath)["sim_id"] == "jvm-v1"
+    assert read_spec(spark, cpath, (IVF,))["sim_id"] == "jvm-v1"
 
     # mismatches are named errors
     with pytest.raises(ValueError, match="sim_id mismatch"):
@@ -379,12 +378,6 @@ def test_append_custom_math_and_spec_mismatches(spark, tmp_path):
         build_ivf_index(a, str(tmp_path / "nope"), dot_fn=sdot, norm_fn=snorm)
     with pytest.raises(ValueError, match="only meaningful"):
         build_ivf_index(a, str(tmp_path / "nope2"), sim_id="x")
-
-    # legacy layout (no spec file) refuses append with steering
-    legacy = str(tmp_path / "legacy")
-    a.withColumn("cell", F.lit(0)).write.partitionBy("cell").parquet(legacy)
-    with pytest.raises(ValueError, match="no persisted spec"):
-        append_to_ivf_index(b, legacy)
 
     # empty-corpus layout refuses append (no centroids to assign with)
     empty = str(tmp_path / "empty")
@@ -407,8 +400,8 @@ def test_lsh_append_equals_rebuild_and_spec_guards(spark, tmp_path):
     """The sign-LSH layout gets the same spec discipline as IVF: append
     hashes with the pinned plane family and equals a one-shot rebuild;
     queries validate conflicting plane parameters instead of silently
-    reading buckets the corpus was never written to; legacy/empty
-    layouts refuse appends; ragged appends are loud."""
+    reading buckets the corpus was never written to; empty layouts
+    refuse appends; ragged appends are loud."""
     from cassandra_analytics_spark.operators.ann_index import (
         append_to_ann_index,
         build_ann_index,
@@ -453,15 +446,6 @@ def test_lsh_append_equals_rebuild_and_spec_guards(spark, tmp_path):
     with pytest.raises(ValueError, match="planes are 8-d"):
         query_ann_index(spark, inc, [1.0, 2.0], k=5)
 
-    # legacy layout (no spec): append refuses, query falls back to 6/42
-    legacy = str(tmp_path / "lsh_legacy")
-    a.withColumn("sig", F.lit(0)).write.partitionBy("sig").parquet(legacy)
-    with pytest.raises(ValueError, match="no persisted spec"):
-        append_to_ann_index(b, legacy)
-    # full-radius probe covers every bucket, so the legacy fallback
-    # (defaults 6/42) still reads the layout
-    assert query_ann_index(spark, legacy, qv, k=3, probe_hamming=6).count() > 0
-
     # empty-corpus layout refuses append
     empty = str(tmp_path / "lsh_empty")
     build_ann_index(both.filter(F.lit(False)), empty)
@@ -481,13 +465,13 @@ def test_torn_rebuild_is_loud_not_silently_stale(spark, tmp_path):
     sidecar writes used to leave the PREVIOUS build's centroids/spec
     paired with the new cells — silent wrong results. Sidecars are now
     deleted before the layout overwrite, so the torn state fails loudly
-    (IVF: missing centroids; LSH: spec-less layout warns and refuses
-    appends). Also: IVF queries validate query dimension and probe count."""
+    (the spec-less layout is refused). Also: IVF queries validate query
+    dimension and probe count."""
     from cassandra_analytics_spark.operators.ann_index import (
         build_ivf_index,
         query_ivf_index,
-        read_ivf_spec,
     )
+    from cassandra_analytics_spark.operators.layout import IVF, read_spec
 
     corpus = _tiny_corpus(spark, range(20))
     path = str(tmp_path / "ivf")
@@ -501,7 +485,7 @@ def test_torn_rebuild_is_loud_not_silently_stale(spark, tmp_path):
     with pytest.raises(Exception):  # loud, not stale results
         query_ivf_index(spark, path, [0.0] * 8, k=3).collect()
     with pytest.raises(ValueError, match="no persisted spec"):
-        read_ivf_spec(spark, path)
+        read_spec(spark, path, (IVF,))
 
     # rebuild heals; then validation probes
     build_ivf_index(corpus, path, num_centroids=4)
@@ -675,8 +659,8 @@ def test_mixed_math_read_contract(spark, tmp_path):
     scoring math is a free choice; sim_id is VALIDATED when presented
     (refused on mismatch, like the append path); reading a custom-math
     layout without it is sanctioned but LOUD; incoherent claims (sim_id
-    without its functions, sim_id against a built-in layout or a
-    spec-less legacy layout) are named errors."""
+    without its functions, sim_id against a built-in layout) are named
+    errors."""
     import warnings as w
 
     from cassandra_analytics_spark.operators.ann_index import (
@@ -742,39 +726,6 @@ def test_mixed_math_read_contract(spark, tmp_path):
         query_ivf_index(
             spark, builtin, qv, k=3, dot_fn=sdot, norm_fn=snorm, sim_id="x"
         )
-
-
-def test_legacy_warning_names_only_the_missing_argument(spark, tmp_path):
-    """Round-10 ADVICE: the pre-spec-layout warning used to claim BOTH
-    defaults were assumed even when one was passed explicitly."""
-    import shutil as sh
-    import warnings as w
-
-    corpus = _tiny_corpus(spark, range(10))
-    legacy = str(tmp_path / "legacy")
-    build_ann_index(corpus, legacy, num_planes=4, seed=7)
-    sh.rmtree(legacy + "_spec")  # simulate a pre-spec layout
-
-    with w.catch_warnings(record=True) as caught:
-        w.simplefilter("always")
-        query_ann_index(
-            spark, legacy, [0.1] * 8, k=3, num_planes=4, probe_hamming=4
-        ).count()
-    msgs = [str(c.message) for c in caught if "no persisted spec" in str(c.message)]
-    assert len(msgs) == 1
-    # only seed was defaulted; num_planes=4 was given and must not be
-    # claimed as assumed — the effective family is stated in full
-    assert "default seed=42" in msgs[0]
-    assert "num_planes=6" not in msgs[0].split("effective")[0]
-    assert "num_planes=4, seed=42" in msgs[0]
-
-    # both explicit: no warning at all
-    with w.catch_warnings():
-        w.simplefilter("error")
-        query_ann_index(
-            spark, legacy, [0.1] * 8, k=3, num_planes=4, seed=7,
-            probe_hamming=4,
-        ).count()
 
 
 def test_knn_join_use_codes_duplicate_id_parity(spark, tmp_path):
@@ -888,7 +839,7 @@ def test_ivf_knn_join_use_pq_exact_plan_and_refusals(spark, tmp_path):
         ivf_knn_join(queries, lean, use_pq=True)
     plain = str(tmp_path / "knn_plain_ivf")
     build_ivf_index(corpus, plain, num_centroids=4)
-    with pytest.raises(ValueError, match="not an IVF-PQ layout|no persisted spec"):
+    with pytest.raises(ValueError, match="has layout format 'ivf-v1'"):
         ivf_knn_join(queries, plain, use_pq=True)
 
 

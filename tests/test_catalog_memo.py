@@ -17,8 +17,12 @@ from __future__ import annotations
 import os
 import shutil
 
+import pytest
+
+from cassandra_analytics_spark import catalog
 from cassandra_analytics_spark.catalog import (
     _SPREAD_MIN_WIDTH,
+    _scan_meta,
     load_table,
     spread_scan,
 )
@@ -44,7 +48,8 @@ def test_load_table_mtime_invalidation(spark, sf_dir, tmp_path):
 
 def test_spread_scan_below_floor_is_untouched(spark, sf_dir):
     """The r16 regression case: a corpus below the rows-per-task floor
-    must come back as the RAW memoized table — no exchange at all."""
+    must come back as the RAW memoized table (projected to ``columns``
+    when given) — no exchange at all."""
     raw = load_table(spark, sf_dir, "documents")
     n_rows = raw.count()
     floor = max(1, (n_rows // max(_SPREAD_MIN_WIDTH - 1, 1)) + 1)
@@ -52,6 +57,14 @@ def test_spread_scan_below_floor_is_untouched(spark, sf_dir):
         spark, sf_dir, "documents", min_rows_per_task=floor
     )
     assert spread is raw
+    # the requested projection applies below the floor too: the schema
+    # never depends on the gate
+    pruned = spread_scan(
+        spark, sf_dir, "documents",
+        columns=("doc_id", "text"), min_rows_per_task=floor,
+    )
+    assert pruned.columns == ["doc_id", "text"]
+    assert "Repartition" not in pruned._jdf.queryExecution().analyzed().toString()
 
 
 def test_spread_scan_sizes_repartition_to_work(spark, sf_dir):
@@ -89,3 +102,41 @@ def test_spread_scan_memoized(spark, sf_dir):
     c = spread_scan(spark, sf_dir, "documents", min_rows_per_task=1)
     d = spread_scan(spark, sf_dir, "documents", min_rows_per_task=1)
     assert c is d
+
+
+@pytest.mark.parametrize(
+    "name", ["text_token_stats", "lang_id_heuristic", "text_pii_scrub"]
+)
+def test_spread_scan_call_sites_same_schema_and_rows_across_gate(
+    spark, sf_dir, monkeypatch, name
+):
+    """Every spread_scan call site returns the same schema and rows
+    whether the cost gate fires (floor forced to 1 row per task) or not
+    (the default floor, above the fixture's size)."""
+    from cassandra_analytics_spark.queries import REGISTRY, _ensure_loaded
+
+    _ensure_loaded()
+
+    def run():
+        df = REGISTRY[name].fn(spark, sf_dir)
+        plan = df._jdf.queryExecution().analyzed().toString()
+        return df.schema, sorted(map(tuple, df.collect())), plan
+
+    schema, rows, plan = run()
+    assert "Repartition" not in plan
+    monkeypatch.setattr(catalog, "SPREAD_MIN_ROWS_PER_TASK", 1)
+    schema_spread, rows_spread, plan_spread = run()
+    assert "Repartition" in plan_spread
+    assert schema_spread == schema
+    assert rows_spread == rows and rows
+
+
+def test_scan_meta_nested_directory_is_unknown_layout(spark, tmp_path):
+    """A partitionBy layout keeps its files one level down: counting only
+    the top-level files would report zero rows, so the footer probe
+    reports the unknown-layout sentinel instead."""
+    path = str(tmp_path / "nested")
+    spark.range(40).selectExpr("id", "id % 2 AS part").write.partitionBy(
+        "part"
+    ).parquet(path)
+    assert _scan_meta(spark, path, os.path.getmtime(path)) == (0, 1 << 30)

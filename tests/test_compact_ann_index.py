@@ -8,11 +8,13 @@ must resolve exactly as before."""
 from __future__ import annotations
 
 import random
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from cassandra_analytics_spark.fs import list_files
+from cassandra_analytics_spark.operators import layout
 from cassandra_analytics_spark.operators.ann_index import (
     append_to_ann_index,
     append_to_ivf_index,
@@ -136,37 +138,116 @@ def test_compact_ivf_and_lsh_layouts_roundtrip(spark, tmp_path):
     assert _topk_rows(query_ann_index(spark, lsh, q, k=10)) == before
 
 
-def test_compact_refusals_and_spec_stash_discipline(spark, tmp_path):
-    """No spec -> loud refusal (including the mid-compaction stash
-    state, which a concurrent read must also refuse); unknown format ->
-    loud; files_per_partition < 1 -> loud."""
-    _, df = _corpus(spark, n=50)
-    bare = str(tmp_path / "bare")
-    df.write.parquet(bare)
-    with pytest.raises(ValueError, match="no persisted spec"):
-        compact_ann_index(spark, bare)
-    with pytest.raises(ValueError, match="files_per_partition"):
-        compact_ann_index(spark, bare, files_per_partition=0)
+def _build(fmt, df, path):
+    if fmt == layout.LSH:
+        build_ann_index(df, path, num_planes=4)
+    elif fmt == layout.IVF:
+        build_ivf_index(df, path, num_centroids=2)
+    elif fmt == layout.PQ:
+        save_pq_index(df, path, m=4, ks=8, sample_size=40, iterations=3)
+    else:
+        save_ivf_pq_index(
+            df, path, num_centroids=2, m=4, ks=8, sample_size=40,
+            iterations=3,
+        )
 
-    # unknown spec format refused before anything is touched
-    weird = str(tmp_path / "weird")
-    df.write.parquet(weird)
-    spark.createDataFrame(
-        [("future-v9",)], "format string"
-    ).write.parquet(f"{weird}_spec")
-    with pytest.raises(ValueError, match="unknown layout format"):
-        compact_ann_index(spark, weird)
+
+def _layout_ops(fmt, spark, df, path):
+    """The query and append entry points of one format, plus compaction."""
+    q = [0.5] * 8
+    query, append = {
+        layout.LSH: (
+            lambda: query_ann_index(spark, path, q, k=3),
+            lambda: append_to_ann_index(df, path),
+        ),
+        layout.IVF: (
+            lambda: query_ivf_index(spark, path, q, k=3),
+            lambda: append_to_ivf_index(df, path),
+        ),
+        layout.PQ: (
+            lambda: query_pq_index(spark, path, q, k=3),
+            lambda: append_to_pq_index(df, path),
+        ),
+        layout.IVF_PQ: (
+            lambda: query_ivf_pq_index(spark, path, q, k=3),
+            lambda: append_to_ivf_pq_index(df, path),
+        ),
+    }[fmt]
+    return {
+        "query": query,
+        "append": append,
+        "compact": lambda: compact_ann_index(spark, path),
+    }
+
+
+# a well-formed spec of a format the query/append path does not read
+# (query_ivf_index also reads IVF-PQ layouts, so IVF gets an LSH spec)
+_OTHER_FORMAT = {
+    layout.LSH: layout.IVF,
+    layout.IVF: layout.LSH,
+    layout.PQ: layout.IVF_PQ,
+    layout.IVF_PQ: layout.PQ,
+}
+
+
+@pytest.mark.parametrize("fmt", layout.FORMATS)
+def test_spec_refusals_are_one_named_error(spark, tmp_path, fmt):
+    """A missing spec, a two-row spec and a spec of another format are
+    refused with the same LayoutSpecError by every query, append and
+    compaction of each format — before anything is read or written."""
+    _, df = _corpus(spark, n=40, dim=8)
+    path = str(tmp_path / "idx")
+    _build(fmt, df, path)
+    spec_dir = layout.spec_path(path)
+    saved = str(tmp_path / "saved_spec")
+    shutil.copytree(spec_dir, saved)
+    spec_row = spark.read.parquet(saved).collect()[0]
+    ops = _layout_ops(fmt, spark, df, path)
+
+    def put_spec(rows, schema):
+        shutil.rmtree(spec_dir, ignore_errors=True)
+        spark.createDataFrame(rows, schema).write.parquet(spec_dir)
+
+    for op_name, op in ops.items():
+        shutil.rmtree(spec_dir)
+        with pytest.raises(layout.LayoutSpecError, match="no persisted spec"):
+            op()
+        put_spec([spec_row, spec_row], layout.SPEC_SCHEMA[fmt])
+        with pytest.raises(layout.LayoutSpecError, match="found 2"):
+            op()
+        # compaction reads all four formats, so it gets an unknown one
+        other = "future-v9" if op_name == "compact" else _OTHER_FORMAT[fmt]
+        put_spec([(other,)], "format string")
+        with pytest.raises(
+            layout.LayoutSpecError, match=f"has layout format '{other}'"
+        ):
+            op()
+    # refusals touched nothing: with the spec restored the layout serves
+    shutil.rmtree(spec_dir)
+    shutil.copytree(saved, spec_dir)
+    assert ops["query"]().count() > 0
+    assert ops["compact"]()["format"] == fmt
+
+
+def test_compact_refusals_and_spec_stash_discipline(spark, tmp_path):
+    """files_per_partition < 1 -> loud; the mid-compaction stash state
+    (spec renamed aside) is refused by a concurrent read and recovers
+    by restoring the stash."""
+    _, df = _corpus(spark, n=50)
+    with pytest.raises(ValueError, match="files_per_partition"):
+        compact_ann_index(spark, str(tmp_path / "any"), files_per_partition=0)
 
     # mid-compaction state: spec stashed aside -> reads refuse loudly
     from cassandra_analytics_spark.fs import rename_path
 
     path = str(tmp_path / "pq2")
     save_pq_index(df, path, m=4, ks=16, sample_size=100, seed=42)
-    assert rename_path(spark, f"{path}_spec", f"{path}_spec__compacting")
-    with pytest.raises(ValueError, match="no persisted PQ spec"):
+    spec, stash = layout.spec_path(path), layout.stash_path(path)
+    assert rename_path(spark, spec, stash)
+    with pytest.raises(layout.LayoutSpecError, match="no persisted spec"):
         query_pq_index(spark, path, [0.0] * 16, k=3)
     # operator recovery: restore the stash, reads work again
-    assert rename_path(spark, f"{path}_spec__compacting", f"{path}_spec")
+    assert rename_path(spark, stash, spec)
     assert query_pq_index(spark, path, [1.0] * 16, k=3).count() == 3
 
 
@@ -250,12 +331,5 @@ def test_stream_survives_mid_life_layout_compaction(spark, tmp_path):
 
 
 def _load_cb(spark, index_path):
-    from cassandra_analytics_spark.operators.pq import (
-        _resolve_ivf_pq_codebook,
-        read_ivf_pq_spec,
-    )
-
-    return _resolve_ivf_pq_codebook(
-        spark, index_path, read_ivf_pq_spec(spark, index_path), None,
-        caller="test",
-    )
+    spec = layout.read_spec(spark, index_path, (layout.IVF_PQ,))
+    return layout.read_codebook(spark, index_path, spec)

@@ -174,11 +174,15 @@ def test_persisted_pq_layout_roundtrip_and_spec_discipline(spark, tmp_path):
     """save/load/query over the persisted PQ layout (the LSH/IVF spec
     discipline applied to PQ): roundtrip exactness under rescore, the
     codebook rehydrates bit-identically, keep_vec=False refuses rescore
-    LOUDLY, and missing/corrupt specs are named errors."""
+    LOUDLY. Missing/corrupt specs are covered for every format by
+    test_compact_ann_index.test_spec_refusals_are_one_named_error."""
+    from cassandra_analytics_spark.operators.layout import (
+        PQ,
+        read_codebook,
+        read_spec,
+    )
     from cassandra_analytics_spark.operators.pq import (
-        load_pq_codebook,
         query_pq_index,
-        read_pq_spec,
         save_pq_index,
     )
     from cassandra_analytics_spark.operators.similarity import (
@@ -188,8 +192,8 @@ def test_persisted_pq_layout_roundtrip_and_spec_discipline(spark, tmp_path):
     rows, df = _corpus(spark, n=300)
     path = str(tmp_path / "pq_idx")
     cb = save_pq_index(df, path, m=8, ks=32, seed=3)
-    assert load_pq_codebook(spark, path) == cb
-    spec = read_pq_spec(spark, path)
+    spec = read_spec(spark, path, (PQ,))
+    assert read_codebook(spark, path, spec) == cb
     assert (spec["dim"], spec["m"], spec["ks"], spec["keep_vec"]) == (
         16, 8, 32, True,
     )
@@ -213,13 +217,6 @@ def test_persisted_pq_layout_roundtrip_and_spec_discipline(spark, tmp_path):
     assert approx.count() == 7
     with pytest.raises(ValueError, match="keep_vec=False"):
         query_pq_index(spark, lean, q, k=7)
-
-    # spec discipline: a spec-less dir is a named error
-    import shutil
-
-    shutil.rmtree(lean + "_spec")
-    with pytest.raises(ValueError, match="no persisted PQ spec"):
-        query_pq_index(spark, lean, q, k=7, rescore=False)
 
 
 def test_query_pq_index_preloaded_codebook(spark, tmp_path):
@@ -252,12 +249,10 @@ def test_ivf_pq_layout_probe_all_exact_and_pruning(spark, tmp_path):
     """IVF-PQ composition: probe-all + rescore equals brute force;
     partial probes return a subset; the probe scan is PARTITION-pruned
     to the probed cells AND reads codes, not floats, in phase 1;
-    keep_vec=False refuses rescore; spec cross-reads are named errors."""
+    keep_vec=False refuses rescore."""
     from cassandra_analytics_spark.operators.pq import (
         query_ivf_pq_index,
-        query_pq_index,
         save_ivf_pq_index,
-        save_pq_index,
     )
     from cassandra_analytics_spark.operators.similarity import (
         brute_force_topk,
@@ -305,7 +300,7 @@ def test_ivf_pq_layout_probe_all_exact_and_pruning(spark, tmp_path):
     pf = [ln for ln in plan.split("\n") if "PartitionFilters" in ln]
     assert any("cell" in ln and " IN " in ln for ln in pf), pf
 
-    # codes-only layout refuses rescore; flat-PQ spec refused here
+    # codes-only layout refuses rescore
     lean = str(tmp_path / "ivfpq_lean")
     save_ivf_pq_index(df, lean, num_centroids=4, codebook=cb,
                       keep_vec=False, seed=3)
@@ -314,12 +309,6 @@ def test_ivf_pq_layout_probe_all_exact_and_pruning(spark, tmp_path):
     ).count() == 7
     with pytest.raises(ValueError, match="keep_vec=False"):
         query_ivf_pq_index(spark, lean, q, k=7)
-    flat = str(tmp_path / "flatpq")
-    save_pq_index(df, flat, codebook=cb)
-    with pytest.raises(ValueError, match="not an IVF-PQ layout"):
-        query_ivf_pq_index(spark, flat, q, k=7)
-    with pytest.raises(ValueError, match="not a save_pq_index layout|pq-v1"):
-        query_pq_index(spark, lean, q, k=7, rescore=False)
 
 
 def test_adc_topk_code_range_guard(spark):
@@ -416,13 +405,6 @@ def test_append_to_pq_index_roundtrip_and_refusals(spark, tmp_path):
     assert "embedding" not in spark.read.parquet(lean).columns
     assert spark.read.parquet(lean).count() == 300
 
-    # spec-less dir refused
-    import shutil
-
-    shutil.rmtree(lean + "_spec")
-    with pytest.raises(ValueError, match="no persisted PQ spec"):
-        append_to_pq_index(second, lean)
-
 
 def test_append_to_ivf_pq_index_roundtrip_and_refusals(spark, tmp_path):
     """IVF-PQ append: batch rows cell-assigned against the PINNED coarse
@@ -433,7 +415,6 @@ def test_append_to_ivf_pq_index_roundtrip_and_refusals(spark, tmp_path):
         append_to_ivf_pq_index,
         query_ivf_pq_index,
         save_ivf_pq_index,
-        save_pq_index,
         train_pq_codebook,
     )
     from cassandra_analytics_spark.operators.similarity import (
@@ -494,12 +475,6 @@ def test_append_to_ivf_pq_index_roundtrip_and_refusals(spark, tmp_path):
     assert "embedding" not in spark.read.parquet(lean).columns
     assert spark.read.parquet(lean).count() == 300
 
-    # a flat-PQ layout presented at the IVF-PQ append path is refused
-    flat = str(tmp_path / "flatpq_app")
-    save_pq_index(first, flat, codebook=cb)
-    with pytest.raises(ValueError, match="not an IVF-PQ layout"):
-        append_to_ivf_pq_index(second, flat)
-
 
 def test_ivf_pq_custom_math_spec_contract(spark, tmp_path):
     """save_ivf_pq_index's custom-math assignment mirrors
@@ -509,9 +484,9 @@ def test_ivf_pq_custom_math_spec_contract(spark, tmp_path):
     match the build's (append = rebuild equivalence on cells)."""
     from cassandra_analytics_spark.operators.pq import (
         append_to_ivf_pq_index,
-        read_ivf_pq_spec,
         save_ivf_pq_index,
     )
+    from cassandra_analytics_spark.operators.layout import IVF_PQ, read_spec
     from cassandra_analytics_spark.operators.similarity import (
         dot as _d,
         norm as _n,
@@ -533,7 +508,7 @@ def test_ivf_pq_custom_math_spec_contract(spark, tmp_path):
         first, cpath, num_centroids=4, m=4, ks=16, seed=3,
         dot_fn=_d, norm_fn=_n, sim_id="std-v1", residuals=True,
     )
-    spec = read_ivf_pq_spec(spark, cpath)
+    spec = read_spec(spark, cpath, (IVF_PQ,))
     assert (spec["assignment"], spec["sim_id"], spec["residuals"]) == (
         "custom", "std-v1", True,
     )
@@ -586,9 +561,9 @@ def test_ivf_pq_vectorized_assignment_mode(spark, tmp_path):
     from cassandra_analytics_spark.operators.pq import (
         append_to_ivf_pq_index,
         query_ivf_pq_index,
-        read_ivf_pq_spec,
         save_ivf_pq_index,
     )
+    from cassandra_analytics_spark.operators.layout import IVF_PQ, read_spec
     from cassandra_analytics_spark.operators.similarity import (
         brute_force_topk,
         dot as _d,
@@ -603,7 +578,7 @@ def test_ivf_pq_vectorized_assignment_mode(spark, tmp_path):
         first, path, num_centroids=5, m=8, ks=32, seed=3,
         assignment="vectorized",
     )
-    assert read_ivf_pq_spec(spark, path)["assignment"] == "vectorized"
+    assert read_spec(spark, path, (IVF_PQ,))["assignment"] == "vectorized"
     append_to_ivf_pq_index(second, path)
 
     # appended rows landed in the cells the VECTORIZED assigner gives
@@ -827,9 +802,9 @@ def test_ivf_pq_residual_encoding_roundtrip(spark, tmp_path):
     from cassandra_analytics_spark.operators.pq import (
         append_to_ivf_pq_index,
         query_ivf_pq_index,
-        read_ivf_pq_spec,
         save_ivf_pq_index,
     )
+    from cassandra_analytics_spark.operators.layout import IVF_PQ, read_spec
     from cassandra_analytics_spark.operators.similarity import (
         brute_force_topk,
     )
@@ -847,7 +822,7 @@ def test_ivf_pq_residual_encoding_roundtrip(spark, tmp_path):
         corpus, res_path, num_centroids=6, m=4, ks=16,
         sample_size=300, iterations=8, seed=42, encoding="residual",
     )
-    spec = read_ivf_pq_spec(spark, res_path)
+    spec = read_spec(spark, res_path, (IVF_PQ,))
     assert spec["encoding"] == "residual"
     got = [
         (r.vec_id, round(r.cosine_sim, 9))

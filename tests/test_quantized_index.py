@@ -18,8 +18,8 @@ from cassandra_analytics_spark.operators.ann_index import (
     ivf_knn_join,
     query_ivf_index,
     query_ivf_index_quantized,
-    read_ivf_spec,
 )
+from cassandra_analytics_spark.operators.layout import IVF, read_spec
 from cassandra_analytics_spark.operators.similarity import brute_force_topk
 
 
@@ -45,7 +45,7 @@ def test_quantized_probe_all_equals_brute_force_both_modes(spark, tmp_path):
     corpus = df.filter("vec_id <> 0")
     path = str(tmp_path / "qivf")
     build_ivf_index(corpus, path, num_centroids=8, quantize=True)
-    assert read_ivf_spec(spark, path)["quantized"] is True
+    assert read_spec(spark, path, (IVF,))["quantized"] is True
 
     want = [
         (r.vec_id, round(r.cosine_sim, 9))

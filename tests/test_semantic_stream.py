@@ -356,8 +356,8 @@ def test_stream_quantized_layout_same_pairs_and_probeable(spark, tmp_path):
     from cassandra_analytics_spark.operators.ann_index import (
         query_ivf_index,
         query_ivf_index_quantized,
-        read_ivf_spec,
     )
+    from cassandra_analytics_spark.operators.layout import IVF, read_spec
 
     rows = _corpus_rows()
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
@@ -380,7 +380,7 @@ def test_stream_quantized_layout_same_pairs_and_probeable(spark, tmp_path):
     assert got == want
 
     ivf = str(tmp_path / "ivf")
-    assert read_ivf_spec(spark, ivf)["quantized"] is True
+    assert read_spec(spark, ivf, (IVF,))["quantized"] is True
     layout = spark.read.parquet(ivf)
     # every row from every batch is code-complete (appends followed the
     # spec — a batch that skipped codes would leave never-ranking rows)
@@ -478,10 +478,8 @@ def test_stream_pq_layout_same_pairs_probeable_and_refusals(spark, tmp_path):
     confirm), every streamed batch lands code-complete with the FROZEN
     bootstrap codebook, and the grown layout serves probe-all PQ reads
     equal to brute force. Scheme/layout mismatches are named errors."""
-    from cassandra_analytics_spark.operators.pq import (
-        query_ivf_pq_index,
-        read_ivf_pq_spec,
-    )
+    from cassandra_analytics_spark.operators.layout import IVF_PQ, read_spec
+    from cassandra_analytics_spark.operators.pq import query_ivf_pq_index
     from cassandra_analytics_spark.operators.similarity import (
         brute_force_topk,
     )
@@ -507,7 +505,7 @@ def test_stream_pq_layout_same_pairs_probeable_and_refusals(spark, tmp_path):
     assert got == want and len(want) > 50
 
     ivf = str(tmp_path / "ivf")
-    spec = read_ivf_pq_spec(spark, ivf)
+    spec = read_spec(spark, ivf, (IVF_PQ,))
     assert spec["residuals"] is True and spec["m"] == 4 and spec["ks"] == 16
     layout = spark.read.parquet(ivf)
     # every row from every batch is code- AND residual-complete
@@ -676,10 +674,10 @@ def test_pq_codebook_collect_amortized_across_triggers(spark, tmp_path, monkeypa
     """r14 VERDICT item 7: the PQ codebook is frozen once the layout
     exists, so the stream must rehydrate it ONCE per stream start (the
     bootstrap seeds the cache with the just-trained codebook), not once
-    or twice per trigger. Counted by wrapping the resolver: a
+    or twice per trigger. Counted by wrapping the reader: a
     codebook=None call is a real m*ks-row collect, a preloaded call is
     a cheap geometry check."""
-    import cassandra_analytics_spark.operators.pq as pq_mod
+    import cassandra_analytics_spark.operators.layout as layout_mod
     from cassandra_analytics_spark.streaming.semantic_stream import (
         process_semantic_batch,
     )
@@ -688,14 +686,14 @@ def test_pq_codebook_collect_amortized_across_triggers(spark, tmp_path, monkeypa
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
     collects = {"n": 0}
-    orig = pq_mod._resolve_ivf_pq_codebook
+    orig = layout_mod.read_codebook
 
-    def counting(spark_, index_path, spec, codebook, caller):
+    def counting(spark_, index_path, spec, codebook=None, caller="test"):
         if codebook is None:
             collects["n"] += 1
         return orig(spark_, index_path, spec, codebook, caller=caller)
 
-    monkeypatch.setattr(pq_mod, "_resolve_ivf_pq_codebook", counting)
+    monkeypatch.setattr(layout_mod, "read_codebook", counting)
 
     cache: dict = {}
     kwargs = dict(
@@ -746,10 +744,8 @@ def test_stream_residual_layout_same_pairs_margin_and_reads(spark, tmp_path):
     layout keeps serving residual-exact top-k reads."""
     import math
 
-    from cassandra_analytics_spark.operators.pq import (
-        query_ivf_pq_index,
-        read_ivf_pq_spec,
-    )
+    from cassandra_analytics_spark.operators.layout import IVF_PQ, read_spec
+    from cassandra_analytics_spark.operators.pq import query_ivf_pq_index
     from cassandra_analytics_spark.operators.similarity import (
         brute_force_topk,
         semantic_dedup_pairs,
@@ -823,7 +819,7 @@ def test_stream_residual_layout_same_pairs_margin_and_reads(spark, tmp_path):
     # the stream-grown layout is a first-class residual layout: spec
     # pinned, every appended row code-complete, reads residual-exact
     ivf = str(tmp_path / "ivf")
-    spec = read_ivf_pq_spec(spark, ivf)
+    spec = read_spec(spark, ivf, (IVF_PQ,))
     assert spec["encoding"] == "residual" and spec["residuals"] is True
     layout = spark.read.parquet(ivf)
     assert layout.count() == 60
@@ -852,7 +848,7 @@ def test_layout_metadata_reads_amortized_across_triggers(
     layout exists, so a cached stream must read each ONCE per stream
     start instead of 4-5 small driver jobs per trigger. Counted by
     wrapping the spec reader and the centroid parquet read."""
-    import cassandra_analytics_spark.operators.ann_index as ann_mod
+    import cassandra_analytics_spark.operators.layout as layout_mod
     import cassandra_analytics_spark.streaming.semantic_stream as ss_mod
     from cassandra_analytics_spark.streaming.semantic_stream import (
         process_semantic_batch,
@@ -862,14 +858,14 @@ def test_layout_metadata_reads_amortized_across_triggers(
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
     spec_reads = {"n": 0}
-    orig_spec = ann_mod._read_ivf_spec_optional
+    orig_spec = layout_mod.read_spec
 
-    def counting_spec(spark_, index_path):
+    def counting_spec(spark_, index_path, formats):
         spec_reads["n"] += 1
-        return orig_spec(spark_, index_path)
+        return orig_spec(spark_, index_path, formats)
 
-    # the stream module resolves the reader through ann_mod at call time
-    monkeypatch.setattr(ann_mod, "_read_ivf_spec_optional", counting_spec)
+    # the stream module resolves the reader through layout at call time
+    monkeypatch.setattr(layout_mod, "read_spec", counting_spec)
 
     cache: dict = {}
     kwargs = dict(
